@@ -77,6 +77,10 @@ TOMBSTONE_DIR = "_tombstones"
 #: index directory without them just resets its version to 0).
 INDEX_VERSION_SUFFIX = ".__index_version"
 
+#: Sidecar field recording the parquet schemas of an index's data
+#: directories (see :func:`write_meta_sidecar`).
+SCHEMA_FIELD = "schemas_json"
+
 
 def _version_dir(path: str) -> str:
     return f"{path.rstrip('/')}{INDEX_VERSION_SUFFIX}"
@@ -228,11 +232,21 @@ def write_tombstones(ids: DataFrame, path: str, *, id_col: str) -> None:
     )
 
 
-def write_meta_sidecar(path: str, field: str, payload: dict) -> None:
+def write_meta_sidecar(
+    path: str, field: str, payload: dict, *, schemas: dict | None = None
+) -> None:
     """Write an index's one-row parameter sidecar in exactly the
     layout ``spark.read.json(path)`` consumes (one JSON object per
     line, a single string ``field`` holding the params as a JSON
     payload — the same shape the previous Spark writer produced).
+
+    ``schemas`` maps a name (``"data"`` for a vector index root,
+    ``"postings"``/``"df"`` for BM25) to the ``StructType`` of the
+    parquet files under it; it rides in the same row as a second
+    string field (:data:`SCHEMA_FIELD`) so searches read the index
+    with a known schema instead of a footer-inference job per call
+    (:func:`read_index_schemas`). Mutations that rewrite a sidecar
+    carry the schemas over.
 
     Driver-side on purpose: a ``coalesce(1).write.json`` of ONE
     metadata row schedules a full Spark write job + commit round —
@@ -244,11 +258,16 @@ def write_meta_sidecar(path: str, field: str, payload: dict) -> None:
     import os
     import shutil
 
+    row = {field: json.dumps(payload)}
+    if schemas:
+        row[SCHEMA_FIELD] = json.dumps(
+            {name: st.jsonValue() for name, st in schemas.items()}
+        )
     tmp = f"{path.rstrip('/')}.__staged__"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     with open(os.path.join(tmp, "part-00000.json"), "w") as fh:
-        fh.write(json.dumps({field: json.dumps(payload)}) + "\n")
+        fh.write(json.dumps(row) + "\n")
     swap_directory(tmp, path)
 
 
@@ -273,9 +292,55 @@ def read_meta_sidecar(path: str, field: str) -> dict | list:
         with open(os.path.join(path, name)) as fh:
             for line in fh:
                 line = line.strip()
-                if line:
-                    return json.loads(json.loads(line)[field])
-    raise FileNotFoundError(f"no sidecar row under {path}")
+                if not line:
+                    continue
+                obj = json.loads(line)
+                value = obj.get(field) if isinstance(obj, dict) else None
+                if value is not None:
+                    return json.loads(value)
+    raise FileNotFoundError(f"no sidecar row with field {field!r} under {path}")
+
+
+def read_index_schemas(path: str) -> dict:
+    """The parquet schemas a sidecar records (see
+    :func:`write_meta_sidecar`'s ``schemas``) as ``{name: StructType}``
+    — empty for a sidecar written before schemas were recorded, whose
+    readers then infer the schema from the files as before."""
+    from pyspark.sql.types import StructType
+
+    try:
+        raw = read_meta_sidecar(path, SCHEMA_FIELD)
+    except FileNotFoundError:
+        return {}
+    return {name: StructType.fromJson(v) for name, v in raw.items()}
+
+
+def read_index_partitions(
+    spark: SparkSession,
+    path: str,
+    partition_col: str,
+    values: list,
+    schema=None,
+) -> DataFrame:
+    """Read ONLY the listed ``{partition_col}={v}`` directories of a
+    partitioned index root (``basePath`` keeps the partition column),
+    with the recorded data ``schema`` when there is one — so neither
+    a listing of unprobed directories nor a footer-inference job runs.
+    The ``partition_col IN values`` filter stays on the read, so the
+    scan still reports it as a partition filter. Directories that do
+    not exist (a cell no vector was ever assigned to) are skipped; if
+    none exists the whole root is read under the same filter, which
+    prunes every file. Local-FS directory checks, like the rest of
+    the store."""
+    import os
+
+    reader = spark.read.option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    dirs = [os.path.join(path, f"{partition_col}={v}") for v in values]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    df = reader.parquet(*dirs) if dirs else reader.parquet(path)
+    return df.filter(F.col(partition_col).isin(list(values)))
 
 
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -290,11 +355,32 @@ def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
+def read_tombstone_rows(
+    spark: SparkSession, path: str, id_type, *extra
+) -> DataFrame | None:
+    """The raw tombstone rows of an index read with a KNOWN schema —
+    ``id`` of the index's id type (widened to ``long`` when integral,
+    so tombstones written from an int or a long id frame both read)
+    plus the ``extra`` fields — so no footer-inference job runs;
+    ``None`` when no delete has ever happened."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import IntegralType, LongType, StructField, StructType
+
+    if isinstance(id_type, IntegralType):
+        id_type = LongType()
+    schema = StructType([StructField("id", id_type), *extra])
+    try:
+        return spark.read.schema(schema).parquet(f"{path}/{TOMBSTONE_DIR}")
+    except AnalysisException:
+        return None
+
+
 def anti_tombstones(df: DataFrame, path: str, id_col: str) -> DataFrame:
     """Drop tombstoned rows from an index read: LEFT ANTI join on the
     id column. No-op (returns ``df`` unchanged, no extra plan nodes)
-    when the index has no tombstones."""
-    tomb = read_tombstones(df.sparkSession, path)
+    when the index has no tombstones. Duplicate tombstone rows need no
+    ``distinct`` — an anti join drops a row on its first match."""
+    tomb = read_tombstone_rows(df.sparkSession, path, df.schema[id_col].dataType)
     if tomb is None:
         return df
     return df.join(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from spatially_databricks_etl_spark.operators.similarity import (
     ANN_MAX_QUERIES,
     check_query_batch,
+    collect_query_batch,
 )
 
 #: Tokenizer contract shared with the SQL oracle: lowercase, split on
@@ -210,9 +211,11 @@ def rrf_fuse(
     straggler tail — wall clock ≈ max(retriever) + fusion instead of
     Σ retrievers. Results are bit-identical (persist changes nothing);
     the persisted lists are registered on the result for
-    ``caching.release_intermediates``. Leave False for already-
-    materialized or trivially-small inputs, where the extra count
-    jobs cost more than the overlap saves.
+    ``caching.release_intermediates``. Zero-weight lists are neither
+    persisted nor counted, and if a count fails the persisted lists
+    are unpersisted before the error propagates. Leave False for
+    already-materialized or trivially-small inputs, where the extra
+    count jobs cost more than the overlap saves.
 
     Returns (query_id, doc_id, score, rank) with rank ≤ ``topk``.
     """
@@ -234,24 +237,32 @@ def rrf_fuse(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     persisted: list[DataFrame] = []
-    if overlap and len(frames) > 1:
+    # zero-weight lists contribute nothing to any score, so they are
+    # never materialized
+    live = [i for i, wi in enumerate(w) if wi != 0.0]
+    if overlap and len(live) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
         from pyspark.storagelevel import StorageLevel
 
-        persisted = [f.persist(StorageLevel.MEMORY_AND_DISK) for f in frames]
+        # persist() marks the frame itself, so `frames` now reads the cache
+        persisted = [frames[i].persist(StorageLevel.MEMORY_AND_DISK) for i in live]
         # 2-3 jobs in flight is plenty (guide §2.6); FIFO scheduling
         # back-fills the earlier job's straggler tail with the next
         # job's tasks. inheritable_thread_target propagates the JVM
         # thread-locals (job group/description) into the pool threads.
-        with ThreadPoolExecutor(max_workers=min(3, len(persisted))) as pool:
-            list(
-                pool.map(
-                    inheritable_thread_target(lambda f: f.count()), persisted
+        try:
+            with ThreadPoolExecutor(max_workers=min(3, len(persisted))) as pool:
+                list(
+                    pool.map(
+                        inheritable_thread_target(lambda f: f.count()), persisted
+                    )
                 )
-            )
-        frames = persisted
+        except BaseException:
+            for f in persisted:
+                f.unpersist()
+            raise
     ranked = [
         f.select(
             F.col(query_id_col).alias("query_id"),
@@ -418,10 +429,12 @@ def bm25_write_index(
     )
     spark = docs.sparkSession
     post_idx = spark.read.parquet(f"{path}/postings")
+    df_frame = post_idx.groupBy("term").agg(
+        F.count(F.lit(1)).cast("double").alias("df")
+    )
+    df_schema = df_frame.schema
     (
-        post_idx.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("double").alias("df"))
-        .repartitionByRange("term")
+        df_frame.repartitionByRange("term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
         .parquet(f"{path}/df")
@@ -448,6 +461,7 @@ def bm25_write_index(
             "avgdl": sum_dl / n_docs if n_docs else 0.0,
             "gen": 0,
         },
+        schemas={"postings": post.schema, "df": df_schema},
     )
 
 
@@ -490,6 +504,7 @@ def bm25_append_index(
     from spatially_databricks_etl_spark.operators.indexstore import (
         begin_index_mutation,
         commit_index_mutation,
+        read_index_schemas,
         read_meta_sidecar,
         swap_directory,
         write_meta_sidecar,
@@ -559,7 +574,12 @@ def bm25_append_index(
     }
     if new_gen is not None:
         new_meta["gen"] = new_gen
-    write_meta_sidecar(f"{path}/_bm25_meta", "bm25_meta_json", new_meta)
+    write_meta_sidecar(
+        f"{path}/_bm25_meta",
+        "bm25_meta_json",
+        new_meta,
+        schemas=read_index_schemas(f"{path}/_bm25_meta"),
+    )
 
 
 def bm25_delete_index(
@@ -607,6 +627,7 @@ def bm25_delete_index(
     from spatially_databricks_etl_spark.operators.indexstore import (
         begin_index_mutation,
         commit_index_mutation,
+        read_index_schemas,
         read_meta_sidecar,
         swap_directory,
         write_meta_sidecar,
@@ -684,7 +705,12 @@ def bm25_delete_index(
     }
     if "gen" in meta:
         new_meta["gen"] = int(meta["gen"])
-    write_meta_sidecar(f"{path}/_bm25_meta", "bm25_meta_json", new_meta)
+    write_meta_sidecar(
+        f"{path}/_bm25_meta",
+        "bm25_meta_json",
+        new_meta,
+        schemas=read_index_schemas(f"{path}/_bm25_meta"),
+    )
     if manifest_live is not None:
         _write_tombstones_gen(
             live.select("doc_id"), path, int(meta.get("gen", 0))
@@ -807,27 +833,24 @@ def _with_gen(df: DataFrame) -> DataFrame:
     return df.withColumn("gen", F.lit(0).cast("long"))
 
 
-def _read_tombstones_gen(spark, path: str) -> DataFrame | None:
+def _read_tombstones_gen(spark, path: str, id_type) -> DataFrame | None:
     """BM25's generation-aware tombstones as (id, tgen): a tombstone
     written at ingest-generation g kills every row of that id with
     ``gen <= g`` — so a LATER re-ingest (gen g+1) is live while the
     replaced rows stay dead, which is exactly what lets upsert be
     delete + append with no physical postings rewrite. Legacy id-only
-    tombstone rows kill every generation (tgen = +inf sentinel),
-    preserving the old semantics. One row per id (max tgen)."""
-    from pyspark.errors import AnalysisException
+    tombstone rows kill every generation (a null ``gen`` reads as the
+    tgen = +inf sentinel), preserving the old semantics. One row per
+    id (max tgen). Read with a known (id, gen) schema (``id_type`` is
+    the index's doc-id type), so no footer-inference job runs."""
+    from pyspark.sql.types import LongType, StructField
 
-    from spatially_databricks_etl_spark.operators.indexstore import TOMBSTONE_DIR
+    from spatially_databricks_etl_spark.operators.indexstore import read_tombstone_rows
 
-    try:
-        t = spark.read.parquet(f"{path}/{TOMBSTONE_DIR}")
-    except AnalysisException:
+    t = read_tombstone_rows(spark, path, id_type, StructField("gen", LongType()))
+    if t is None:
         return None
-    tg = (
-        F.col("gen").cast("long")
-        if "gen" in t.columns
-        else F.lit(2**62).cast("long")
-    )
+    tg = F.coalesce(F.col("gen"), F.lit(2**62).cast("long"))
     return t.select("id", tg.alias("tgen")).groupBy("id").agg(
         F.max("tgen").alias("tgen")
     )
@@ -838,7 +861,7 @@ def _anti_tombstones_gen(df: DataFrame, path: str, id_col: str) -> DataFrame:
     (id match AND row gen <= tombstone gen). No-op without tombstones
     (beyond ensuring the ``gen`` column exists)."""
     d = _with_gen(df)
-    tomb = _read_tombstones_gen(df.sparkSession, path)
+    tomb = _read_tombstones_gen(df.sparkSession, path, df.schema[id_col].dataType)
     if tomb is None:
         return d
     return d.join(
@@ -916,42 +939,65 @@ def bm25_search_index(
     postings and df scans (range-sorted layout → footer min/max file
     skipping), the scalar stats come from the sidecar, and scoring +
     ranking match :func:`bm25_topk` exactly over the same corpus
-    (pinned by test). The distinct-term collect is query-batch-sized,
-    and the batch size is ENFORCED, not just documented:
-    ``check_query_batch`` (default ceiling
-    ``similarity.ANN_MAX_QUERIES``) raises before the collect on a
-    degenerate mega-batch — the same contract as the LSH/IVF/IVF-PQ
-    index routers."""
+    (pinned by test).
+
+    The query batch reaches the driver ONCE: one bounded collect
+    (:func:`~spatially_databricks_etl_spark.operators.similarity.collect_query_batch`,
+    which enforces ``max_queries`` — default
+    ``similarity.ANN_MAX_QUERIES`` — the same contract as the
+    LSH/IVF/IVF-PQ index routers) of each query's TOKENS, so Spark
+    still tokenizes; the distinct (query, term) rows broadcast from a
+    driver-built frame. The postings, df and tombstone reads use the
+    schemas recorded at write time (indexes written before schemas
+    were recorded still infer them), so no inference job runs per
+    call."""
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
     from spatially_databricks_etl_spark.operators.indexstore import (
+        apply_allowed_ids,
+        read_index_schemas,
         read_meta_sidecar,
     )
     from spatially_databricks_etl_spark.operators.relational import top_k_per_group
 
-    check_query_batch(queries, "bm25_search_index", max_queries)
+    tbl, qschema = collect_query_batch(
+        queries,
+        "bm25_search_index",
+        [F.col(query_id_col).alias("query_id"), tokens_col(query_col).alias("__toks")],
+        max_queries,
+    )
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_bm25_meta", "bm25_meta_json")
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(tokens_col(query_col)).alias("term"),
-        )
-        .distinct()
+    schemas = read_index_schemas(f"{path}/_bm25_meta")
+    # distinct (query, term) pairs, each keeping the row index of its
+    # first occurrence so the query id column is taken as-is
+    pairs: dict = {}
+    for i, (qid, toks) in enumerate(
+        zip(tbl.column("query_id").to_pylist(), tbl.column("__toks").to_pylist())
+    ):
+        for t in toks or []:
+            pairs.setdefault((qid, t), i)
+    qterms = spark.createDataFrame(
+        tbl.select(["query_id"])
+        .take(pa.array(list(pairs.values()), pa.int64()))
+        .append_column("term", pa.array([t for _, t in pairs], pa.string())),
+        StructType([qschema["query_id"], StructField("term", StringType())]),
     )
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        apply_allowed_ids,
-    )
+    terms = sorted({t for _, t in pairs})
 
-    terms = sorted({r["term"] for r in qterms.select("term").distinct().collect()})
+    def read(sub: str) -> DataFrame:
+        reader = spark.read
+        if sub in schemas:
+            reader = reader.schema(schemas[sub])
+        return reader.parquet(f"{path}/{sub}").filter(F.col("term").isin(terms))
+
     post = apply_allowed_ids(
-        _anti_tombstones_gen(
-            spark.read.parquet(f"{path}/postings").filter(F.col("term").isin(terms)),
-            path,
-            "doc_id",
-        ),
+        _anti_tombstones_gen(read("postings"), path, "doc_id"),
         allowed_ids,
         "doc_id",
     )
-    df_t = spark.read.parquet(f"{path}/df").filter(F.col("term").isin(terms))
+    df_t = read("df")
     matched = post.join(F.broadcast(qterms), "term").join(F.broadcast(df_t), "term")
     n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
     idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))

@@ -23,13 +23,20 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from spatially_databricks_etl_spark.functions.vectors import cosine_similarity, dot
+from spatially_databricks_etl_spark.functions.vectors import (
+    cosine_from_norms,
+    dot,
+    l2_norm,
+)
 from spatially_databricks_etl_spark.operators.indexstore import (
     anti_tombstones,
     apply_allowed_ids,
     clear_tombstones,
     compact_partitioned_index,
+    read_index_partitions,
+    read_index_schemas,
     read_meta_sidecar,
     write_meta_sidecar,
     write_tombstones,
@@ -49,6 +56,16 @@ from spatially_databricks_etl_spark.operators.relational import (
 ANN_MAX_QUERIES = 10_000
 
 
+def _too_many_queries(op: str, max_queries: int) -> ValueError:
+    return ValueError(
+        f"{op}: query batch exceeds {max_queries} rows — the batch is "
+        "collected/broadcast by contract. Split the queries into "
+        "batches, raise max_queries explicitly, or use a persisted "
+        "index path (lsh_search_index / ivf_search_index / "
+        "ivfpq_search_index) with batched query sets."
+    )
+
+
 def check_query_batch(
     queries: DataFrame, op: str, max_queries: int | None = ANN_MAX_QUERIES
 ) -> None:
@@ -57,18 +74,154 @@ def check_query_batch(
     ``limit(n+1).count()`` job — it never materializes more than
     ``max_queries + 1`` rows regardless of the input size. Pass
     ``max_queries=None`` to opt out (e.g. when the caller has already
-    counted the batch)."""
+    counted the batch). Searchers that need the batch on the driver
+    anyway use :func:`collect_query_batch` instead."""
     if max_queries is None:
         return
     n = queries.limit(max_queries + 1).count()
     if n > max_queries:
-        raise ValueError(
-            f"{op}: query batch exceeds {max_queries} rows — the batch is "
-            "collected/broadcast by contract. Split the queries into "
-            "batches, raise max_queries explicitly, or use a persisted "
-            "index path (lsh_search_index / ivf_search_index / "
-            "ivfpq_search_index) with batched query sets."
+        raise _too_many_queries(op, max_queries)
+
+
+def collect_query_batch(
+    queries: DataFrame,
+    op: str,
+    cols: list[Column],
+    max_queries: int | None = ANN_MAX_QUERIES,
+):
+    """The query batch's ``cols`` on the driver as a ``pyarrow.Table``,
+    in ONE bounded collect — the same contract as
+    :func:`check_query_batch` (same ``ValueError`` above
+    ``max_queries``; ``None`` opts out and collects everything) for
+    the persisted-index searchers, which route on the driver and so
+    need the rows anyway: one job replaces the count job AND the
+    probe-key collect. Arrow, not ``Row`` objects:
+    ``limit(n).toArrow()`` is one job (a ``limit(n).collect()`` scans
+    one partition first and then schedules a second job for the rest),
+    and frames the caller builds from the table with
+    ``spark.createDataFrame(table, schema)`` keep the exact column
+    types and are a ``LocalRelation`` of in-memory rows — projections
+    over it are evaluated while planning, and broadcasting it is one
+    small job (a frame created from Python rows is a parallelized RDD
+    of pickled rows, measured about twice as slow to broadcast).
+    Returns (table, Spark schema of ``cols``)."""
+    sel = queries.select(*cols)
+    tbl = (sel if max_queries is None else sel.limit(max_queries + 1)).toArrow()
+    if max_queries is not None and tbl.num_rows > max_queries:
+        raise _too_many_queries(op, max_queries)
+    return tbl, sel.schema
+
+
+def _sequential_dots(vecs: list, mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``dot(v, m_j)`` for every collected vector ``v`` and every row
+    ``m_j`` of ``mat``, with the SAME bits as the Spark
+    :func:`~spatially_databricks_etl_spark.functions.vectors.dot`:
+    float64 products ``v[i]·m_j[i]`` summed strictly left to right from
+    0.0 (one vectorized add per element index — never BLAS ``@``,
+    whose blocked/FMA summation order rounds differently). Returns
+    (dots (n, rows(mat)), null mask (n,)): a vector that is null, has
+    a null element, or has a different length than ``mat``'s rows
+    gives a null dot in Spark, flagged here."""
+    n_rows, dim = mat.shape
+    null = np.array(
+        [v is None or len(v) != dim or any(x is None for x in v) for v in vecs], bool
+    )
+    q = np.zeros((len(vecs), dim))
+    for i, v in enumerate(vecs):
+        if not null[i]:
+            q[i] = np.asarray(v, dtype=np.float64)
+    acc = np.zeros((len(vecs), n_rows))
+    for i in range(dim):
+        acc = acc + q[:, i : i + 1] * mat[None, :, i]
+    return acc, null
+
+
+def route_cells(
+    qvecs: list, centroids: list[list[float]], nprobe: int
+) -> list[list[int]]:
+    """Driver-side IVF routing: the ``nprobe`` probed cells of each
+    query vector — bit-for-bit the cells Spark's :func:`_probe_cells`
+    picks. Similarities are the same float64 values the Spark
+    expression computes (:func:`_sequential_dots` against the
+    centroids pre-scaled by the same ``1/|c_j|`` doubles as
+    :func:`_scaled_centroid_lit`), and the order is the same
+    ``array_sort`` → ``reverse`` order: descending by (sim, cell), so
+    exact ties go to the HIGHER cell id, NaN sorts above every number
+    and a null similarity (null/ragged query vector) below. Shared by
+    the IVF and IVF-PQ searchers; O(queries·cells·dim) driver work on
+    a batch that is collected anyway, and no centroid literal is ever
+    built on the search path."""
+    if nprobe < 0:
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
+    if not centroids:
+        return [[] for _ in qvecs]
+    cents = np.asarray(centroids, dtype=np.float64)
+    scaled = cents * np.asarray(_inv_norms(centroids))[:, None]
+    sims, null = _sequential_dots(qvecs, scaled)
+    cls = np.where(np.isnan(sims), 2, 1)
+    cls[null] = 0
+    val = np.where(cls == 1, sims, 0.0)
+    cell = np.broadcast_to(np.arange(len(centroids)), sims.shape)
+    order = np.lexsort((cell, val, cls), axis=-1)[:, ::-1][:, :nprobe]
+    return [[int(c) for c in row] for row in order]
+
+
+def _probe_frame(
+    spark,
+    tbl,
+    schema: StructType,
+    probe_sets: list[list[int]],
+    key: str,
+    key_type=None,
+) -> DataFrame:
+    """(query cols…, ``key``, __qnorm): one row per (query, probed
+    partition), built on the driver from the collected query table —
+    no query plan is re-run, the frame is a local relation (see
+    :func:`collect_query_batch`), and the query norm is computed once
+    per probe row, not once per scored pair."""
+    import pyarrow as pa
+
+    key_type = key_type or IntegerType()
+    take = [i for i, ps in enumerate(probe_sets) for _ in ps]
+    keys = [int(p) for ps in probe_sets for p in ps]
+    arrow_type = pa.int64() if isinstance(key_type, LongType) else pa.int32()
+    probes = tbl.take(pa.array(take, pa.int64())).append_column(
+        key, pa.array(keys, arrow_type)
+    )
+    st = StructType(schema.fields + [StructField(key, key_type)])
+    return spark.createDataFrame(probes, st).withColumn("__qnorm", l2_norm("__qvec"))
+
+
+def _score_index_topk(
+    corpus: DataFrame, probes: DataFrame, key: str, k: int
+) -> DataFrame:
+    """Exact cosine + per-query top-k of a pruned index read against
+    driver-built probe rows (broadcast, joined on the partition
+    column). The corpus norm is computed once per corpus row before
+    the join."""
+    scored = (
+        corpus.withColumn("__cnorm", l2_norm("embedding"))
+        .join(F.broadcast(probes), on=key)
+        .withColumn(
+            "cosine_sim", cosine_from_norms("__qvec", "embedding", "__qnorm", "__cnorm")
         )
+    )
+    out = top_k_per_group(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("vec_id")], k, rank_col="rank"
+    )
+    return out.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim", "rank"
+    )
+
+
+def _data_schemas(assigned: DataFrame, partition_col: str) -> dict:
+    """``{"data": schema}`` of a partitioned index write — every column
+    but the partition column, which partition discovery re-derives."""
+    return {
+        "data": StructType(
+            [f for f in assigned.schema.fields if f.name != partition_col]
+        )
+    }
 
 
 def brute_force_topk(
@@ -91,13 +244,13 @@ def brute_force_topk(
     check_query_batch(queries, "brute_force_topk", max_queries)
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
+    ).withColumn("__qnorm", l2_norm("__qvec"))
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")),
         "neighbor_id",
-    )
+    ).withColumn("__cnorm", l2_norm("__cvec"))
     scored = c.join(F.broadcast(q)).withColumn(
-        "cosine_sim", cosine_similarity(F.col("__qvec"), F.col("__cvec"))
+        "cosine_sim", cosine_from_norms("__qvec", "__cvec", "__qnorm", "__cnorm")
     )
     out = top_k_per_group(
         scored,
@@ -217,13 +370,15 @@ def lsh_bucketed_topk(
         "neighbor_id",
     )
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    c = c.withColumn("__bucket", lsh_bucket("__cvec", hp))
+    c = c.withColumn("__bucket", lsh_bucket("__cvec", hp)).withColumn(
+        "__cnorm", l2_norm("__cvec")
+    )
     q = q.withColumn(
         "__bucket",
         F.explode(lsh_probe_buckets("__qvec", hp, multiprobe=multiprobe)),
-    )
+    ).withColumn("__qnorm", l2_norm("__qvec"))
     scored = c.join(F.broadcast(q), on="__bucket").withColumn(
-        "cosine_sim", cosine_similarity(F.col("__qvec"), F.col("__cvec"))
+        "cosine_sim", cosine_from_norms("__qvec", "__cvec", "__qnorm", "__cnorm")
     )
     out = top_k_per_group(
         scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")], k, rank_col="rank"
@@ -270,6 +425,7 @@ def lsh_write_index(
         f"{path}/_lsh_meta",
         "lsh_params_json",
         {"planes": planes, "dim": dim, "seed": seed},
+        schemas=_data_schemas(bucketed, "__bucket"),
     )
 
 
@@ -320,38 +476,48 @@ def lsh_search_index(
     max_queries: int | None = ANN_MAX_QUERIES,
 ) -> DataFrame:
     """Search a persisted LSH index (see :func:`lsh_write_index`):
-    queries bucket with the sidecar's hyperplanes, the distinct query
-    buckets become a STATIC partition filter (only probed directories
-    are listed/read), and scoring broadcast-joins the query batch on
-    the partition column. Identical results to
-    :func:`lsh_bucketed_topk` over the same corpus and parameters
-    (pinned by test)."""
-    check_query_batch(queries, "lsh_search_index", max_queries)
+    the query batch is collected once (bounded, see
+    :func:`collect_query_batch`) and bucketed on the driver with the
+    sidecar's hyperplanes (:func:`_route_buckets` — the same bits as
+    :func:`lsh_bucket`); only the probed bucket directories are listed
+    and read (a STATIC partition filter, with the recorded schema),
+    and scoring broadcast-joins the driver-built probe rows on the
+    partition column. Identical results to :func:`lsh_bucketed_topk`
+    over the same corpus and parameters (pinned by test)."""
+    tbl, qschema = collect_query_batch(
+        queries,
+        "lsh_search_index",
+        [F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")],
+        max_queries,
+    )
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_lsh_meta", "lsh_params_json")
     hp = _hyperplanes(meta["dim"], meta["planes"], meta["seed"])
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    ).withColumn("__bucket", lsh_bucket("__qvec", hp))
-    buckets = sorted({r["__bucket"] for r in q.select("__bucket").distinct().collect()})
+    probe_sets = [[b] for b in _route_buckets(tbl.column("__qvec").to_pylist(), hp)]
+    buckets = sorted({b for (b,) in probe_sets})
+    schema = read_index_schemas(f"{path}/_lsh_meta").get("data")
     corpus = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(path).filter(F.col("__bucket").isin(buckets)),
-            path,
-            "vec_id",
+            read_index_partitions(spark, path, "__bucket", buckets, schema), path, "vec_id"
         ),
         allowed_ids,
         "vec_id",
     )
-    scored = corpus.join(F.broadcast(q), on="__bucket").withColumn(
-        "cosine_sim", cosine_similarity(F.col("__qvec"), F.col("embedding"))
-    )
-    out = top_k_per_group(
-        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("vec_id")], k, rank_col="rank"
-    )
-    return out.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim", "rank"
-    )
+    # bucket ids are long, like lsh_bucket's (planes may exceed 31)
+    probes = _probe_frame(spark, tbl, qschema, probe_sets, "__bucket", LongType())
+    return _score_index_topk(corpus, probes, "__bucket", k)
+
+
+def _route_buckets(qvecs: list, planes: np.ndarray) -> list[int]:
+    """Driver-side :func:`lsh_bucket`: bit i set iff
+    ``dot(v, plane_i) >= 0`` under Spark's comparison semantics — the
+    dot products bit-identical (:func:`_sequential_dots`), NaN counting
+    as greater than 0, a null dot (null/ragged vector) leaving the bit
+    clear."""
+    dots, null = _sequential_dots(qvecs, np.asarray(planes, dtype=np.float64))
+    bits = (dots >= 0) | np.isnan(dots)
+    bits[null] = False
+    return [int(sum(1 << i for i in np.flatnonzero(row))) for row in bits]
 
 
 def cosine_self_join_pairs(
@@ -371,26 +537,44 @@ def cosine_self_join_pairs(
     base = ensure_parallelism(
         corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")), "__id"
     )
-    bucketed = base.withColumn("__bucket", lsh_bucket("__vec", hp))
-    left = bucketed.select(F.col("__id").alias("id_a"), F.col("__vec").alias("__va"), "__bucket")
-    right = bucketed.select(F.col("__id").alias("id_b"), F.col("__vec").alias("__vb"), "__bucket")
+    bucketed = base.withColumn("__bucket", lsh_bucket("__vec", hp)).withColumn(
+        "__norm", l2_norm("__vec")
+    )
+    left = bucketed.select(
+        F.col("__id").alias("id_a"),
+        F.col("__vec").alias("__va"),
+        F.col("__norm").alias("__na"),
+        "__bucket",
+    )
+    right = bucketed.select(
+        F.col("__id").alias("id_b"),
+        F.col("__vec").alias("__vb"),
+        F.col("__norm").alias("__nb"),
+        "__bucket",
+    )
     return (
         left.join(right, on="__bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", cosine_similarity(F.col("__va"), F.col("__vb")))
+        .withColumn("cosine_sim", cosine_from_norms("__va", "__vb", "__na", "__nb"))
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
         .dropDuplicates(["id_a", "id_b"])
     )
 
 
+def _inv_norms(raw_cents: list[list[float]]) -> list[float]:
+    """``1/|c_j|`` per centroid (1.0 for a zero centroid) — the one
+    definition the Spark literal and the driver router both scale by."""
+    return [1.0 / (float(np.linalg.norm(c)) or 1.0) for c in raw_cents]
+
+
 def _scaled_centroid_lit(raw_cents: list[list[float]]) -> Column:
     """Centroids (pre-scaled by 1/|c_j|) as ONE nested literal array —
     an indexed transform over it keeps the expression tree O(1) in
     n_centroids (vs n_centroids separate dot expressions — compile
-    time grows with tree size, and the search path is re-planned per
-    query batch)."""
-    inv = [1.0 / (float(np.linalg.norm(c)) or 1.0) for c in raw_cents]
+    time grows with tree size). Assignment-side only: searches route
+    on the driver (:func:`route_cells`) and never build it."""
+    inv = _inv_norms(raw_cents)
     return F.array(
         *[F.array(*[F.lit(x * inv[j]) for x in c]) for j, c in enumerate(raw_cents)]
     )
@@ -521,12 +705,16 @@ def ivf_topk(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")),
         "neighbor_id",
     )
-    assigned = c.withColumn("__cell", F.array_max(cell_sims(F.col("__cvec"))).getField("cell"))
+    assigned = c.withColumn(
+        "__cell", F.array_max(cell_sims(F.col("__cvec"))).getField("cell")
+    ).withColumn("__cnorm", l2_norm("__cvec"))
 
-    probes = _probe_cells(queries, cell_sims, nprobe, query_id_col, vec_col)
+    probes = _probe_cells(queries, cell_sims, nprobe, query_id_col, vec_col).withColumn(
+        "__qnorm", l2_norm("__qvec")
+    )
 
     scored = assigned.join(F.broadcast(probes), on="__cell").withColumn(
-        "cosine_sim", cosine_similarity(F.col("__qvec"), F.col("__cvec"))
+        "cosine_sim", cosine_from_norms("__qvec", "__cvec", "__qnorm", "__cnorm")
     )
     out = top_k_per_group(
         scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")], k, rank_col="rank"
@@ -584,7 +772,12 @@ def ivf_write_index(
     assigned.repartition("__cell").write.mode("overwrite").partitionBy(
         "__cell"
     ).parquet(path)
-    write_meta_sidecar(f"{path}/_ivf_meta", "centroids_json", centroids)
+    write_meta_sidecar(
+        f"{path}/_ivf_meta",
+        "centroids_json",
+        centroids,
+        schemas=_data_schemas(assigned, "__cell"),
+    )
 
 
 def ivf_append_index(
@@ -650,39 +843,50 @@ def ivf_search_index(
 ) -> DataFrame:
     """Search a persisted IVF index (see :func:`ivf_write_index`).
 
-    The probed cell set is computed from the (small) query batch and
-    applied as a STATIC partition filter on the index scan — the plan
-    shows non-empty ``PartitionFilters`` and only the probed
-    directories are read. Per-query routing then broadcast-joins the
-    probe rows on the partition column. Result is identical to
-    :func:`ivf_topk` over the same corpus and centroids (pinned by
-    test). The collect is O(queries·nprobe) — the query batch is
-    broadcast anyway, so driver-side cell routing adds no new scale
-    constraint."""
-    check_query_batch(queries, "ivf_search_index", max_queries)
+    Per call, the index reaches the driver ONCE before the final
+    query: one bounded collect of the query batch
+    (:func:`collect_query_batch` — it also enforces ``max_queries``).
+    Cell routing then runs on the driver (:func:`route_cells`, the same
+    probed cells as :func:`_probe_cells` bit for bit), and the probed
+    cell set becomes the read itself: only the probed ``__cell=N``
+    directories are listed and read — unprobed cells are never even
+    listed — with the data schema recorded in the ``_ivf_meta``
+    sidecar, so no schema-inference job runs (indexes written before
+    the schema was recorded still infer it). The ``__cell IN (…)``
+    filter stays on the scan (the plan shows non-empty
+    ``PartitionFilters``). Tombstones read with a known schema, and
+    the probe rows (one per query and probed cell, built on the driver
+    with each query's norm) broadcast-join on the partition column;
+    the corpus norm is computed once per row. Job budget of a warm
+    call: the bounded collect (one job), the tombstone broadcast (only
+    when tombstones exist), the probe broadcast and the scoring query
+    (scan + top-k shuffle: two jobs under AQE) — five, pinned at ≤ 6
+    by test.
+
+    Result is identical to :func:`ivf_topk` over the same corpus and
+    centroids (pinned by test). The driver-side work is
+    O(queries·cells·dim) on a batch that is broadcast anyway, so
+    driver-side routing adds no new scale constraint."""
+    tbl, qschema = collect_query_batch(
+        queries,
+        "ivf_search_index",
+        [F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")],
+        max_queries,
+    )
     spark = queries.sparkSession
     cents = centroids if centroids is not None else ivf_read_centroids(spark, path)
-    cell_sims = _cell_sims(_scaled_centroid_lit(cents))
-    probes = _probe_cells(queries, cell_sims, nprobe, query_id_col, vec_col)
-    cells = sorted({r["__cell"] for r in probes.select("__cell").distinct().collect()})
+    probe_sets = route_cells(tbl.column("__qvec").to_pylist(), cents, nprobe)
+    cells = sorted({c for cs in probe_sets for c in cs})
+    schema = read_index_schemas(f"{path}/_ivf_meta").get("data")
     corpus = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(path).filter(F.col("__cell").isin(cells)),
-            path,
-            "vec_id",
+            read_index_partitions(spark, path, "__cell", cells, schema), path, "vec_id"
         ),
         allowed_ids,
         "vec_id",
     )
-    scored = corpus.join(F.broadcast(probes), on="__cell").withColumn(
-        "cosine_sim", cosine_similarity(F.col("__qvec"), F.col("embedding"))
-    )
-    out = top_k_per_group(
-        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("vec_id")], k, rank_col="rank"
-    )
-    return out.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), "cosine_sim", "rank"
-    )
+    probes = _probe_frame(spark, tbl, qschema, probe_sets, "__cell")
+    return _score_index_topk(corpus, probes, "__cell", k)
 
 
 def fuzzy_join(
@@ -910,6 +1114,7 @@ def ivfpq_write_index(
         f"{path}/_ivfpq_meta",
         "ivfpq_json",
         {"centroids": centroids, "codebooks": codebooks},
+        schemas=_data_schemas(assigned, "__cell"),
     )
 
 
@@ -960,11 +1165,13 @@ def ivfpq_search_index(
     max_queries: int | None = ANN_MAX_QUERIES,
 ) -> DataFrame:
     """Search a persisted IVF-PQ index: probe the ``nprobe`` nearest
-    cells per query (STATIC partition filter — unprobed directories
-    are never listed), run the PQ asymmetric-distance pass over the
-    probed cells' code column, keep a per-query ``shortlist``
-    (default 4·k), and exact-cosine rerank only the shortlist against
-    the stored vectors. Returns (query_id, neighbor_id, cosine_sim,
+    cells per query (routed on the driver by :func:`route_cells`, the
+    same routing as :func:`ivf_search_index`, from ONE bounded collect
+    of the query batch; only the probed cell directories are listed
+    and read, with the recorded schema), run the PQ
+    asymmetric-distance pass over the probed cells' code column, keep
+    a per-query ``shortlist`` (default 4·k), and exact-cosine rerank
+    only the shortlist against the stored vectors. Returns (query_id, neighbor_id, cosine_sim,
     rank), ties on neighbor id — the same contract as every other
     ANN entry point.
 
@@ -978,27 +1185,27 @@ def ivfpq_search_index(
     top-``shortlist``s, so the result is bit-identical to the
     unreduced form.
     """
-    import numpy as np
     import pandas as pd
-
-    from spatially_databricks_etl_spark.operators.relational import top_k_per_group
 
     if shortlist is None:
         shortlist = 4 * k
-    check_query_batch(queries, "ivfpq_search_index", max_queries)
+    tbl, qschema = collect_query_batch(
+        queries,
+        "ivfpq_search_index",
+        [F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")],
+        max_queries,
+    )
+    if not tbl.num_rows:
+        raise ValueError("ivfpq_search_index: empty query set")
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_ivfpq_meta", "ivfpq_json")
     cents, codebooks = meta["centroids"], meta["codebooks"]
     cb = np.asarray(codebooks, dtype=np.float64)
     m, _, subdim = cb.shape
 
-    qrows = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qv")
-    ).collect()
-    if not qrows:
-        raise ValueError("ivfpq_search_index: empty query set")
-    qids = np.asarray([r["__qid"] for r in qrows])
-    Q = np.stack([np.asarray(r["__qv"], dtype=np.float64) for r in qrows])
+    qvecs = tbl.column("__qvec").to_pylist()
+    qids = np.asarray(tbl.column("query_id").to_pylist())
+    Q = np.stack([np.asarray(v, dtype=np.float64) for v in qvecs])
     lut = np.stack(
         [
             (
@@ -1010,26 +1217,19 @@ def ivfpq_search_index(
         axis=1,
     )
 
-    # probed cells per query, driver-side (centroids are a driver
-    # object; O(queries·cells) work on the already-collected batch)
-    C = np.asarray(cents, dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
-    sims = Qn @ Cn.T
-    # probe sets keyed by QUERY INDEX (never by a cast of the id
-    # value) so non-integer query ids — strings, uuids — work
-    # unchanged; the id itself only rides along in the output column.
-    probe_sets = [
-        sorted(np.argsort(-sims[i], kind="stable")[:nprobe].tolist())
-        for i in range(len(qids))
-    ]
+    # probed cells per query, routed on the driver exactly as the IVF
+    # searcher routes (and as the write-side assignment scores cells);
+    # keyed by QUERY INDEX (never by a cast of the id value) so
+    # non-integer query ids — strings, uuids — work unchanged.
+    probe_sets = route_cells(qvecs, cents, nprobe)
     cells = sorted({c for cs in probe_sets for c in cs})
+    data_schema = read_index_schemas(f"{path}/_ivfpq_meta").get("data")
 
     codes = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(path)
-            .filter(F.col("__cell").isin(cells))
-            .select("vec_id", "pq_code", "__cell"),
+            read_index_partitions(spark, path, "__cell", cells, data_schema).select(
+                "vec_id", "pq_code", "__cell"
+            ),
             path,
             "vec_id",
         ),
@@ -1076,7 +1276,7 @@ def ivfpq_search_index(
                 else pd.DataFrame({"query_id": [], "vec_id": [], "adc_dist": []})
             )
 
-    qid_t = queries.schema[query_id_col].dataType.simpleString()
+    qid_t = qschema["query_id"].dataType.simpleString()
     # the corpus id type comes from the STORED index schema, not a
     # hardcoded long — string/int ids round-trip through the index
     vid_t = codes.schema["vec_id"].dataType.simpleString()
@@ -1091,22 +1291,19 @@ def ivfpq_search_index(
         rank_col="__adc_rank",
     ).select("query_id", "vec_id")
     vecs = (
-        spark.read.parquet(path)
-        .filter(F.col("__cell").isin(cells))
+        read_index_partitions(spark, path, "__cell", cells, data_schema)
         .select("vec_id", "embedding")
+        .withColumn("__cnorm", l2_norm("embedding"))
+    )
+    qframe = spark.createDataFrame(tbl, qschema).withColumn(
+        "__qnorm", l2_norm("__qvec")
     )
     exact = (
         short.join(vecs, "vec_id")
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(query_id_col).alias("query_id"),
-                    F.col(vec_col).alias("__qvec"),
-                )
-            ),
-            "query_id",
+        .join(F.broadcast(qframe), "query_id")
+        .withColumn(
+            "cosine_sim", cosine_from_norms("__qvec", "embedding", "__qnorm", "__cnorm")
         )
-        .withColumn("cosine_sim", cosine_similarity(F.col("__qvec"), F.col("embedding")))
     )
     out = top_k_per_group(
         exact,

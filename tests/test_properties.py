@@ -1933,3 +1933,134 @@ def test_kcore_matches_python_reference(spark, edges, k, rounds):
     for a, b in cur:
         want[a] = want.get(a, 0) + 1
     assert got == want, (sorted(sym), k, rounds, got, want)
+
+
+def _bits(x):
+    """Exact identity of a collected double (None-safe, -0.0 ≠ 0.0)."""
+    import struct
+
+    return None if x is None else struct.pack(">d", x)
+
+
+VEC_ELEM = st.one_of(
+    st.none(),
+    st.sampled_from([0.0, -0.0, 1.0, -2.5, 3.0e-7]),
+    st.floats(width=32, allow_nan=True, allow_infinity=True),
+)
+VEC = st.one_of(st.none(), st.lists(VEC_ELEM, max_size=5))
+
+
+@given(
+    pairs=st.lists(st.tuples(VEC, VEC), min_size=1, max_size=10),
+    elem=st.sampled_from(["double", "float"]),
+)
+@SETTINGS
+def test_cosine_from_norms_bit_identical_to_per_pair_cosine(spark, pairs, elem):
+    """Cosine from norms computed once per row in an earlier projection
+    (as the searchers do before their join) gives the same bits as the
+    per-pair form on null arrays, empty arrays, unequal lengths, null
+    elements and ``array<float>`` inputs."""
+    from spatially_databricks_etl_spark.functions.vectors import (
+        cosine_from_norms,
+        cosine_similarity,
+        dot,
+        l2_norm,
+    )
+
+    df = spark.createDataFrame(pairs, f"a array<{elem}>, b array<{elem}>")
+    na, nb = l2_norm("a"), l2_norm("b")
+    per_pair = F.when((na > 0) & (nb > 0), dot("a", "b") / (na * nb)).otherwise(
+        F.lit(None).cast("double")
+    )
+    rows = (
+        df.select("a", "b", na.alias("na"), nb.alias("nb"))
+        .select(
+            per_pair.alias("want"),
+            cosine_similarity("a", "b").alias("cos"),
+            cosine_from_norms("a", "b", "na", "nb").alias("cos_norms"),
+        )
+        .collect()
+    )
+    for p, r in zip(pairs, rows):
+        assert _bits(r["cos"]) == _bits(r["want"]), (p, r)
+        assert _bits(r["cos_norms"]) == _bits(r["want"]), (p, r)
+
+
+# few distinct coordinates, so exact similarity ties (and duplicate or
+# zero centroids) are common
+COORD = st.sampled_from([0.0, -0.0, 1.0, -1.0, 0.5, 2.0, -3.0])
+
+
+@given(
+    data=st.data(),
+    dim=st.integers(1, 4),
+    n_cells=st.integers(1, 6),
+)
+@SETTINGS
+def test_route_cells_matches_spark_probe_cells(spark, data, dim, n_cells):
+    """Driver-side routing picks the same probed cells, in the same
+    order, as the Spark ``_probe_cells`` expression — including forced
+    exact ties (a duplicated centroid), zero centroids, and null or
+    ragged query vectors."""
+    from spatially_databricks_etl_spark.operators.similarity import (
+        _cell_sims,
+        _probe_cells,
+        _scaled_centroid_lit,
+        route_cells,
+    )
+
+    cents = data.draw(
+        st.lists(st.lists(COORD, min_size=dim, max_size=dim), min_size=n_cells, max_size=n_cells)
+    )
+    cents.append(list(cents[0]))  # an exact tie with cell 0 on every query
+    qvec = st.one_of(
+        st.lists(st.one_of(COORD, st.floats(-4, 4)), min_size=dim, max_size=dim),
+        st.none(),
+        st.lists(COORD, min_size=dim + 1, max_size=dim + 1),
+        st.lists(st.one_of(st.none(), COORD), min_size=dim, max_size=dim),
+    )
+    qvecs = data.draw(st.lists(qvec, min_size=1, max_size=6))
+    nprobe = data.draw(st.integers(0, len(cents) + 1))
+
+    qdf = spark.createDataFrame(list(enumerate(qvecs)), "query_id long, embedding array<double>")
+    probes = _probe_cells(
+        qdf, _cell_sims(_scaled_centroid_lit(cents)), nprobe, "query_id", "embedding"
+    )
+    want: dict[int, list[int]] = {i: [] for i in range(len(qvecs))}
+    for r in probes.groupBy("query_id").agg(F.collect_list("__cell").alias("c")).collect():
+        want[r["query_id"]] = sorted(r["c"])
+    got = route_cells(qvecs, cents, nprobe)
+    assert {i: sorted(c) for i, c in enumerate(got)} == want, (cents, qvecs, nprobe)
+
+
+@given(data=st.data(), dim=st.integers(1, 4), planes=st.integers(1, 5))
+@SETTINGS
+def test_route_buckets_matches_spark_lsh_bucket(spark, data, dim, planes):
+    """Driver-side LSH bucketing gives the same bucket as the Spark
+    ``lsh_bucket`` expression, zero dot products (sign ties) and null
+    vectors included."""
+    import numpy as np
+
+    from spatially_databricks_etl_spark.operators.similarity import (
+        _route_buckets,
+        lsh_bucket,
+    )
+
+    hp = np.asarray(
+        data.draw(
+            st.lists(st.lists(COORD, min_size=dim, max_size=dim), min_size=planes, max_size=planes)
+        )
+    )
+    qvecs = data.draw(
+        st.lists(
+            st.one_of(st.none(), st.lists(COORD, min_size=dim, max_size=dim)),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    qdf = spark.createDataFrame(list(enumerate(qvecs)), "query_id long, embedding array<double>")
+    want = [
+        r["b"]
+        for r in qdf.orderBy("query_id").select(lsh_bucket("embedding", hp).alias("b")).collect()
+    ]
+    assert _route_buckets(qvecs, hp) == want, (hp, qvecs)
